@@ -813,9 +813,11 @@ def minhash_lsh_pairs(
     # (probed on raw docs, not `base`: the ≥n-words filter would evaluate
     # split(text) across the whole corpus inside the probe scan — a full
     # tokenize pass spent on a heuristic; the distinct ratio of the raw
-    # corpus is the same signal, and the branch choice is output-neutral)
+    # corpus is the same signal, and the branch choice is output-neutral).
+    # Both sides skip NULL texts: approx_count_distinct ignores them, so a
+    # count(*) would read null-text rows as duplicates.
     probe = docs.agg(
-        F.count("*").alias("n"), F.approx_count_distinct(text_col).alias("nd")
+        F.count(text_col).alias("n"), F.approx_count_distinct(text_col).alias("nd")
     ).collect()[0]
     groups = None
     doc_fp = None

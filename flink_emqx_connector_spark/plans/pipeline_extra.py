@@ -576,6 +576,12 @@ def scan_jsonl_roundtrip(spark, sf_dir):
     tags=("warehouse", "layout", "overwrite", "formats"),
 )
 def dynamic_partition_overwrite(spark, sf_dir):
+    # validated before anything is read: the salt below needs a modulus >= 1
+    splits = int(os.environ.get("SPARK_GRAFT_DAY_WRITE_SPLITS", "4"))
+    if splits < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_DAY_WRITE_SPLITS must be >= 1, got {splits}"
+        )
     ev = _t(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").cast("date").alias("day"), "value"
     )
@@ -593,7 +599,6 @@ def dynamic_partition_overwrite(spark, sf_dir):
     # still O(days × splits) files, parallel within a day. Local default 4
     # keeps sf0.1 files reasonably sized; at 100 TB set it so per-file
     # output lands in the 128 MB–1 GB band (day_bytes / ~512 MB).
-    splits = int(os.environ.get("SPARK_GRAFT_DAY_WRITE_SPLITS", "4"))
     salt = F.pmod(F.xxhash64("value"), F.lit(splits))
     ev.repartition(F.col("day"), salt).write.mode("overwrite").partitionBy(
         "day"

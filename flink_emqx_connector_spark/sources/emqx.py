@@ -53,7 +53,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..schema import EMQX_MESSAGE_SCHEMA, EMQX_MESSAGE_SCHEMA_ORDERED_PROPS
-from .transport import Message, PahoTransport, SpoolTransport
+from .transport import PahoTransport, SpoolTransport
 
 #: Driver-side bridge registry (transport="bridge"): keyed off the reader,
 #: never pickled to executors.
@@ -212,10 +212,6 @@ class EMQXStreamReader(DataSourceStreamReader):
                 partition.index,
                 partition.num_partitions,
             )
-            yield from columns_to_record_batches(
-                cols, self.max_per_batch, props_mode=self.props_mode
-            )
-            return
         else:
             t = PahoTransport.get(
                 self.host,
@@ -232,12 +228,12 @@ class EMQXStreamReader(DataSourceStreamReader):
             # commit() ran on the driver; the executor learns the committed
             # frontier from the batch window start and acks below it (ST3).
             t.ack_upto(partition.start - 1)
-            msgs = t.drain(partition.end, self.max_per_batch, self.poll_timeout_s)
+            cols = t.drain(partition.end, self.max_per_batch, self.poll_timeout_s)
         # Arrow batches, not per-row tuples: the row path pickles one row at
         # a time (~5k rows/s); a RecordBatch crosses the Python→JVM boundary
         # vectorized (~10× source throughput).
-        yield from messages_to_record_batches(
-            msgs, self.max_per_batch, props_mode=self.props_mode
+        yield from columns_to_record_batches(
+            cols, self.max_per_batch, props_mode=self.props_mode
         )
 
 
@@ -289,9 +285,9 @@ def _props_arrow_array(pairs_per_row: list, props_mode: str):
 def columns_to_record_batches(
     cols: dict[str, list], chunk: int = 10000, props_mode: str = "map"
 ):
-    """Columnar spool output → pyarrow RecordBatches matching
-    EMQX_MESSAGE_SCHEMA (or the ordered-props variant); no per-message
-    objects anywhere on this path."""
+    """A transport's column dict (``transport.COLUMNS``) → pyarrow
+    RecordBatches matching EMQX_MESSAGE_SCHEMA (or the ordered-props
+    variant); no per-message objects anywhere on this path."""
     import pyarrow as pa
 
     schema = _arrow_schema(props_mode)
@@ -306,41 +302,6 @@ def columns_to_record_batches(
                 _props_arrow_array(cols["properties"][sl], props_mode),
                 pa.array(cols["payload"][sl], pa.binary()),
                 pa.array(cols["timestamp"][sl], pa.timestamp("us")),
-            ],
-            schema=schema,
-        )
-
-
-def messages_to_record_batches(
-    msgs: list[Message], chunk: int = 10000, props_mode: str = "map"
-):
-    """Convert a drained message list (paho path) to pyarrow RecordBatches
-    matching EMQX_MESSAGE_SCHEMA (topic, qos, retained, properties,
-    payload, timestamp[us]) or its ordered-props variant."""
-    import pyarrow as pa
-
-    schema = _arrow_schema(props_mode)
-    for i in range(0, len(msgs), chunk):
-        blk = msgs[i : i + chunk]
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([m.topic for m in blk], pa.string()),
-                pa.array([m.qos for m in blk], pa.int32()),
-                pa.array([m.retained for m in blk], pa.bool_()),
-                _props_arrow_array(
-                    [
-                        m.prop_pairs
-                        if m.prop_pairs is not None
-                        else list(m.properties.items())
-                        for m in blk
-                    ],
-                    props_mode,
-                ),
-                pa.array([m.payload for m in blk], pa.binary()),
-                pa.array(
-                    [int(m.timestamp * 1_000_000) for m in blk],
-                    pa.timestamp("us"),
-                ),
             ],
             schema=schema,
         )
@@ -377,6 +338,5 @@ __all__ = [
     "EMQXDataSource",
     "EMQXStreamReader",
     "EMQXPartition",
-    "Message",
     "register_emqx_source",
 ]

@@ -18,16 +18,21 @@ Two implementations with identical at-least-once semantics:
   streaming tests that mirror the reference's four integration scenarios
   (``EMQXSourceIntegrationTest.java:125-364``).
 
-Messages are dicts: ``{topic, qos, retained, properties, payload(bytes),
-timestamp(float epoch)}``.
+Both hand the source one message form, a dict of equal-length column
+lists (``COLUMNS``): ``seq``, ``topic``, ``qos``, ``retained``,
+``properties`` (ordered ``(key, value)`` pairs), ``payload`` (bytes) and
+``timestamp`` (µs since the epoch).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
-from dataclasses import dataclass, field
+
+#: Keys of the column dict every transport returns, one list per key.
+COLUMNS = ("seq", "topic", "qos", "retained", "properties", "payload", "timestamp")
 
 
 def _prop_pairs(raw) -> list[tuple[str, str]]:
@@ -39,34 +44,6 @@ def _prop_pairs(raw) -> list[tuple[str, str]]:
     if isinstance(raw, dict):
         return list(raw.items())
     return [(k, v) for k, v in raw]
-
-
-@dataclass
-class Message:
-    topic: str
-    qos: int
-    retained: bool
-    properties: dict[str, str]
-    payload: bytes
-    timestamp: float
-    seq: int = -1  # spool sequence / per-client arrival counter
-    #: ordered user-property pairs, duplicates preserved; None when the
-    #: producing path only had the deduplicated map form
-    prop_pairs: list[tuple[str, str]] | None = None
-
-    def to_row(self):
-        import datetime as dt
-
-        return (
-            self.topic,
-            self.qos,
-            self.retained,
-            self.properties,
-            self.payload,
-            dt.datetime.fromtimestamp(self.timestamp, dt.timezone.utc).replace(
-                tzinfo=None
-            ),
-        )
 
 
 # --------------------------------------------------------------------------
@@ -88,33 +65,67 @@ def _scan_segments(spool_dir: str):
     """(closed, open_) segment listings.
 
     closed: list of (first_seq, last_seq, path); open_: list of paths.
+
+    The listing is the union of two back-to-back ``os.listdir`` calls. On a
+    spool of a few hundred segments one listing takes several system calls,
+    and a roll (``.openseg`` → ``.seg`` rename) between two of them can hide
+    the segment or show it in both forms. A segment rolls once, so it is in
+    at least one of two consecutive listings; one seen in both forms counts
+    as closed.
     """
-    closed, open_ = [], []
     if not os.path.isdir(spool_dir):
-        return closed, open_
-    for f in os.listdir(spool_dir):
-        path = os.path.join(spool_dir, f)
+        return [], []
+    names = set(os.listdir(spool_dir))
+    names |= set(os.listdir(spool_dir))
+    closed, rolled = [], set()
+    for f in names:
         if f.endswith(".seg"):
-            first, last = f.split("-", 2)[:2]
-            closed.append((int(first), int(last), path))
-        elif f.endswith(".openseg"):
-            open_.append(path)
+            first, last, token = f[: -len(".seg")].split("-")
+            closed.append((int(first), int(last), os.path.join(spool_dir, f)))
+            rolled.add(f"{first}-{token}.openseg")
+    open_ = [
+        os.path.join(spool_dir, f)
+        for f in names
+        if f.endswith(".openseg") and f not in rolled
+    ]
     closed.sort()
     return closed, open_
+
+
+def _segment_forms(path: str):
+    """``path``, then — for an ``.openseg`` — the closed form its roll
+    renames it to (``{first}-{last}-{token}.seg``), looked up lazily."""
+    yield path
+    if path.endswith(".openseg"):
+        first, token = os.path.basename(path)[: -len(".openseg")].split("-")
+        yield from glob.glob(
+            os.path.join(os.path.dirname(path), f"{first}-*-{token}.seg")
+        )
 
 
 def _scan_segment_seqs(path: str) -> list[tuple[int, str]]:
     """(seq, json_body) per line WITHOUT parsing the JSON — each line is
     ``{seq:012d} {json}``, so consumers can claim/filter on the cheap
-    integer prefix and json-parse only the lines they own. A torn trailing
-    line (publisher mid-write) is skipped — complete on the next poll."""
-    try:
-        with open(path) as f:
-            raw = f.read()
-    except FileNotFoundError:
+    integer prefix and json-parse only the lines they own.
+
+    Every segment read (``latest_seq``, the range reads, ack GC, publisher
+    restart) goes through here, so the live-spool races are handled once:
+    - only newline-terminated lines count: a trailing line the publisher is
+      still writing is left for the next poll, so ``latest_seq`` never
+      admits a seq the read would then drop;
+    - an ``.openseg`` that vanished after it was listed was rolled, and is
+      read from its closed form."""
+    for form in _segment_forms(path):
+        try:
+            with open(form) as f:
+                raw = f.read()
+            break
+        except FileNotFoundError:
+            continue
+    else:
         return []  # acked/GC'd concurrently
     out = []
-    for line in raw.splitlines():
+    for line in raw.split("\n")[:-1]:
         if len(line) < 14 or line[12] != " ":
             continue
         try:
@@ -145,17 +156,6 @@ def _claims_segment(path: str, partition_id: int, num_partitions: int) -> bool:
     return zlib.crc32(key.encode()) % num_partitions == partition_id
 
 
-def _read_segment_lines(path: str) -> list[dict]:
-    """Fully-parsed records of a segment (publisher-restart scans)."""
-    out = []
-    for _seq, body in _scan_segment_seqs(path):
-        try:
-            out.append(json.loads(body))
-        except json.JSONDecodeError:
-            continue
-    return out
-
-
 class SpoolPublisher:
     """Publisher: appends NDJSON lines to an open segment, flushing per
     publish, and rolls the segment every ``segment_size`` messages
@@ -176,17 +176,13 @@ class SpoolPublisher:
         os.makedirs(spool_dir, exist_ok=True)
         self.token = uuid.uuid4().hex[:8]
         self.segment_size = segment_size
-        closed, open_ = _scan_segments(spool_dir)
-        last = max((c[1] for c in closed), default=-1)
-        for path in open_:
-            for rec in _read_segment_lines(path):
-                last = max(last, rec["seq"])
         # The FRONTIER file is the durable floor: after ack_upto GCs all
         # closed segments, the segment scan alone would restart seqs BELOW
-        # the acked frontier — and read_range clamps lo to the frontier, so
-        # those messages would be permanently masked (silent loss). The
-        # frontier outlives exactly the segments it subsumes.
-        self._next = max(last + 1, SpoolTransport(spool_dir).frontier())
+        # the acked frontier — and reads clamp lo to the frontier, so those
+        # messages would be permanently masked (silent loss). The frontier
+        # outlives exactly the segments it subsumes.
+        spool = SpoolTransport(spool_dir)
+        self._next = max(spool.latest_seq(), spool.frontier())
         self._fd = None
         self._open_path = ""
         self._open_start = 0
@@ -278,36 +274,6 @@ class SpoolTransport:
                 last = max(last, seq)
         return last + 1
 
-    def read_range(
-        self, start: int, end: int, partition_id: int, num_partitions: int
-    ) -> list[Message]:
-        """Messages in [start, end) claimed by this partition — the spool
-        analogue of the broker's shared-subscription load balancing
-        (one clientid per partition, EMQXSourceReader.java:103)."""
-        lo = max(start, self.frontier())
-        if lo >= end:
-            return []
-        out = []
-        for seq, body in self._claimed_rows(lo, end, partition_id, num_partitions):
-            try:
-                rec = json.loads(body)
-            except json.JSONDecodeError:
-                continue  # torn trailing line
-            pairs = _prop_pairs(rec["properties"])
-            out.append(
-                Message(
-                    topic=rec["topic"],
-                    qos=rec["qos"],
-                    retained=rec["retained"],
-                    properties=dict(pairs),
-                    payload=bytes.fromhex(rec["payload_hex"]),
-                    timestamp=rec["timestamp"],
-                    seq=seq,
-                    prop_pairs=pairs,
-                )
-            )
-        return out
-
     def _claimed_rows(
         self, lo: int, end: int, partition_id: int, num_partitions: int
     ) -> list[tuple[int, str]]:
@@ -337,21 +303,21 @@ class SpoolTransport:
     def read_range_columns(
         self, start: int, end: int, partition_id: int, num_partitions: int
     ) -> dict[str, list]:
-        """Columnar form of ``read_range`` for the Arrow source path: one
-        dict of plain lists, no per-message object construction (2× on the
-        hot read path at high message rates). Rows are in seq order."""
+        """Messages in [start, end) claimed by this partition — the spool
+        analogue of the broker's shared-subscription load balancing (one
+        clientid per partition, EMQXSourceReader.java:103) — as a dict of
+        plain lists keyed by ``COLUMNS``, in seq order. Every row below
+        ``end`` that ``latest_seq`` counted is returned, even while the
+        publisher rolls segments."""
         lo = max(start, self.frontier())
-        cols: dict[str, list] = {
-            "seq": [], "topic": [], "qos": [], "retained": [],
-            "properties": [], "payload": [], "timestamp": [],
-        }
+        cols: dict[str, list] = {k: [] for k in COLUMNS}
         if lo >= end:
             return cols
         for seq, body in self._claimed_rows(lo, end, partition_id, num_partitions):
             try:
                 rec = json.loads(body)
             except json.JSONDecodeError:
-                continue  # torn trailing line
+                continue  # corrupt line (torn tails never get here)
             cols["seq"].append(seq)
             cols["topic"].append(rec["topic"])
             cols["qos"].append(rec["qos"])
@@ -578,9 +544,12 @@ class PahoTransport:
         cli.loop_start()
         self.client = cli
 
-    def drain(self, batch_id: int, max_records: int, timeout_s: float) -> list[Message]:
-        """Drain up to max_records into this batch; retried tasks of the
-        same batch re-emit the buffered messages (no loss within a run)."""
+    def drain(
+        self, batch_id: int, max_records: int, timeout_s: float
+    ) -> dict[str, list]:
+        """Drain up to max_records into this batch as a dict of lists keyed
+        by ``COLUMNS``; retried tasks of the same batch re-emit the buffered
+        messages (no loss within a run)."""
         import queue as q
 
         if batch_id in self.pending:  # task retry → redeliver buffer
@@ -594,27 +563,19 @@ class PahoTransport:
                 except q.Empty:
                     break
             self.pending[batch_id] = msgs
-        out = []
+        cols: dict[str, list] = {k: [] for k in COLUMNS}
         for seq, arrival_ts, m in msgs:
-            pairs: list[tuple[str, str]] = []
-            if getattr(m, "properties", None) is not None:
-                pairs = [
-                    (k, v)
-                    for k, v in getattr(m.properties, "UserProperty", []) or []
-                ]
-            out.append(
-                Message(
-                    topic=m.topic,
-                    qos=m.qos,
-                    retained=bool(m.retain),
-                    properties=dict(pairs),
-                    payload=bytes(m.payload),
-                    timestamp=arrival_ts,
-                    seq=seq,
-                    prop_pairs=pairs,
-                )
+            props = getattr(m, "properties", None)
+            cols["seq"].append(seq)
+            cols["topic"].append(m.topic)
+            cols["qos"].append(m.qos)
+            cols["retained"].append(bool(m.retain))
+            cols["properties"].append(
+                _prop_pairs(getattr(props, "UserProperty", None))
             )
-        return out
+            cols["payload"].append(bytes(m.payload))
+            cols["timestamp"].append(int(arrival_ts * 1_000_000))
+        return cols
 
     def ack_upto(self, batch_id: int) -> None:
         """Ack every buffered message of batches ≤ batch_id (subsuming

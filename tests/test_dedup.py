@@ -108,6 +108,35 @@ def test_null_text_tolerated_everywhere(spark):
     assert sorted((r.doc_a, r.doc_b) for r in lsh) == [(2, 3)]
 
 
+def test_minhash_probe_ignores_null_texts(spark):
+    """The dup-ratio probe counts non-NULL texts on both sides: distinct
+    texts plus NULL-text rows take the distinct branch (a plain LSH plan,
+    no exact-dup group union), while real copies still take the dup-heavy
+    branch. Pairs are the same either way."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    texts = [f"doc {i} alpha beta gamma" for i in range(20)]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    nulls = [(100 + i, None) for i in range(6)]
+    # precondition: the HLL sketch reads this fixture as fully distinct
+    sketch = spark.createDataFrame(rows, schema).agg(F.approx_count_distinct("text"))
+    assert sketch.collect()[0][0] == len(texts)
+
+    def lsh(rows):
+        out = D.minhash_lsh_pairs(spark.createDataFrame(rows, schema), threshold=0.5)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return plan, sorted((r.doc_a, r.doc_b, r.jaccard) for r in out.collect())
+
+    plan, pairs = lsh(rows + nulls)
+    assert "Union" not in plan, plan
+    assert pairs == lsh(rows)[1]
+    dup_plan, _ = lsh(rows + [(200 + i, t) for i, t in enumerate(texts)])
+    assert "Union" in dup_plan, dup_plan
+
+
 def test_dense_jaccard_degenerate_texts(spark):
     """Empty strings and sub-n-gram texts produce empty shingle sets and
     must never pair; identical short texts still pair at jaccard 1.0 —

@@ -99,11 +99,11 @@ def test_transport_protocol_over_real_sockets(broker):
 
     assert _wait(lambda: t.queue.qsize() == 5)
     b1 = t.drain(1, max_records=3, timeout_s=0.2)
-    assert [m.payload for m in b1] == [b"0", b"1", b"2"]
+    assert b1["payload"] == [b"0", b"1", b"2"]
     again = t.drain(1, max_records=3, timeout_s=0.2)  # task retry
-    assert [m.payload for m in again] == [b"0", b"1", b"2"]
+    assert again == b1
     b2 = t.drain(2, max_records=10, timeout_s=0.2)
-    assert [m.payload for m in b2] == [b"3", b"4"]
+    assert b2["payload"] == [b"3", b"4"]
     assert broker.session_backlog("c-proto-0") == 5  # un-acked inflight
     t.ack_upto(2)
     assert _wait(lambda: broker.session_backlog("c-proto-0") == 0)
@@ -122,8 +122,8 @@ def test_arrival_timestamp_stamped_in_on_message(broker):
     assert _wait(lambda: t.queue.qsize() == 1)
     time.sleep(1.2)  # slow trigger
     drain_start = time.time()
-    (msg,) = t.drain(1, max_records=10, timeout_s=0.2)
-    assert msg.timestamp <= drain_start - 1.0, (msg.timestamp, drain_start)
+    (ts_us,) = t.drain(1, max_records=10, timeout_s=0.2)["timestamp"]
+    assert ts_us / 1e6 <= drain_start - 1.0, (ts_us, drain_start)
     t.client.disconnect()
     pub.disconnect()
 
@@ -150,7 +150,7 @@ def test_message_delivery_shared_group(broker):
     assert _wait(lambda: sum(t.queue.qsize() for t in ts) == 3)
     got = []
     for t in ts:
-        got += [m.payload for m in t.drain(1, max_records=10, timeout_s=0.2)]
+        got += t.drain(1, max_records=10, timeout_s=0.2)["payload"]
     assert sorted(got) == [b"1", b"2", b"3"]  # once each, across the group
     # round-robin spread: no member got everything
     assert max(len(t.pending.get(1, [])) for t in ts) < 3
@@ -171,7 +171,7 @@ def test_graceful_stop_then_restart_no_redelivery(broker):
         pub.publish("t/1", str(i).encode(), qos=1).wait_for_publish()
     assert _wait(lambda: t.queue.qsize() == 10)
     msgs = t.drain(1, max_records=100, timeout_s=0.2)
-    assert len(msgs) == 10
+    assert len(msgs["payload"]) == 10
     t.ack_upto(1)  # checkpoint complete
     assert _wait(lambda: broker.session_backlog("c-stop-0") == 0)
     t.client.disconnect()
@@ -182,7 +182,7 @@ def test_graceful_stop_then_restart_no_redelivery(broker):
     assert t2.queue.qsize() == 0
     pub.publish("t/1", b"after", qos=1).wait_for_publish()
     assert _wait(lambda: t2.queue.qsize() == 1)
-    assert [m.payload for m in t2.drain(1, 10, 0.2)] == [b"after"]
+    assert t2.drain(1, 10, 0.2)["payload"] == [b"after"]
     t2.ack_upto(1)
     t2.client.disconnect()
     pub.disconnect()
@@ -200,7 +200,7 @@ def test_crash_without_ack_redelivers(broker, qos):
         pub.publish("t/1", str(i).encode(), qos=qos).wait_for_publish()
     assert _wait(lambda: t.queue.qsize() == 10)
     msgs = t.drain(1, max_records=100, timeout_s=0.2)
-    assert len(msgs) == 10
+    assert len(msgs["payload"]) == 10
     # crash: reader dies without DISCONNECT (loop_stop closes the socket
     # and kills the reconnect loop; no graceful packet), acks never sent
     t.client.loop_stop()
@@ -210,9 +210,7 @@ def test_crash_without_ack_redelivers(broker, qos):
     t2 = _transport(broker.port, "c-crash-0", group="gcrash")
     assert _wait(lambda: t2.queue.qsize() == 10)
     redelivered = t2.drain(1, max_records=100, timeout_s=0.2)
-    assert sorted(m.payload for m in redelivered) == sorted(
-        m.payload for m in msgs
-    )
+    assert sorted(redelivered["payload"]) == sorted(msgs["payload"])
     t2.ack_upto(1)
     assert _wait(lambda: broker.session_backlog("c-crash-0") == 0)
     # acked for real: yet another incarnation sees nothing
@@ -235,7 +233,7 @@ def test_broker_offline_at_start(tmp_path):
     probe.close()
 
     t = _transport(port, "c-off-0", group="goff")  # must not raise (ST6)
-    assert t.drain(1, max_records=10, timeout_s=0.05) == []
+    assert t.drain(1, max_records=10, timeout_s=0.05)["payload"] == []
 
     broker = EmbeddedBroker(port=port).start()
     try:
@@ -249,7 +247,7 @@ def test_broker_offline_at_start(tmp_path):
             pub.publish("t/1", str(i).encode(), qos=1).wait_for_publish()
         assert _wait(lambda: t.queue.qsize() == 10)
         got = t.drain(2, max_records=100, timeout_s=0.2)
-        assert sorted(m.payload for m in got) == sorted(
+        assert sorted(got["payload"]) == sorted(
             str(i).encode() for i in range(10)
         )
         t.ack_upto(2)
@@ -631,10 +629,10 @@ def test_properties_list_fidelity_end_to_end(spark, broker, tmp_path):
     # default map mode on the same spool: duplicate key collapses last-wins
     from flink_emqx_connector_spark.sources.transport import SpoolTransport
 
-    msgs = SpoolTransport(spool).read_range(0, 10_000, 0, 1)
-    m = [x for x in msgs if x.payload == b"dup"][0]
-    assert m.prop_pairs == [("k", "v1"), ("k", "v2"), ("trace", "t9")]
-    assert m.properties == {"k": "v2", "trace": "t9"}  # last-wins map view
+    cols = SpoolTransport(spool).read_range_columns(0, 10_000, 0, 1)
+    pairs = cols["properties"][cols["payload"].index(b"dup")]
+    assert pairs == [("k", "v1"), ("k", "v2"), ("trace", "t9")]
+    assert dict(pairs) == {"k": "v2", "trace": "t9"}  # last-wins map view
 
 
 def test_qos2_client_suppresses_dup_after_lost_pubrec():
@@ -1027,7 +1025,7 @@ def test_bridge_reconnect_replays_backlog_as_one_prefix_aligned_block(tmp_path):
         assert _wait(lambda: st.latest_seq() == n + (n - k), timeout=30)
         assert _wait(lambda: broker.session_backlog(cid) == 0)
         time.sleep(0.5)  # any scattered extras would land here
-        payloads = [m.payload for m in st.read_range(0, 10 * n, 0, 1)]
+        payloads = st.read_range_columns(0, 10 * n, 0, 1)["payload"]
         expect = [b"p%03d" % i for i in range(n)] + [
             b"p%03d" % i for i in range(k, n)
         ]
@@ -1095,9 +1093,7 @@ def test_bridge_watchdog_respawns_dead_member():
         # never scattered: each payload 1-2 copies, nothing foreign.
         from collections import Counter
 
-        copies = Counter(
-            bytes(m.payload) for m in st.read_range(0, 100, 0, 1)
-        )
+        copies = Counter(st.read_range_columns(0, 100, 0, 1)["payload"])
         expect = {b"before", b"after"} | {b"down%d" % i for i in range(5)}
         assert set(copies) == expect, copies
         assert all(1 <= c <= 2 for c in copies.values()), copies
@@ -1363,7 +1359,7 @@ def test_bridge_scale_in_and_out_no_loss(tmp_path):
         pump("c", 30)
 
         def all_present():
-            got = {m.payload for m in st.read_range(0, 10_000, 0, 1)}
+            got = set(st.read_range_columns(0, 10_000, 0, 1)["payload"])
             return set(sent) <= got
         assert _wait(all_present, timeout=15), "lost messages across resize"
         # spool durability precedes the ack: the final PUBACK can still be

@@ -6,6 +6,7 @@ recall / stationary computations, and brute-force dominance for the
 Pareto frontier."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from flink_emqx_connector_spark.plans.registry import QUERIES
@@ -421,6 +422,15 @@ def test_lsh_recall_eval_consistent_with_members(spark, sf_dir):
 
 
 # ---------- X109 dynamic partition overwrite ----------
+
+
+@pytest.mark.parametrize("splits", ["0", "-3"])
+def test_dynamic_overwrite_rejects_splits_below_one(monkeypatch, splits):
+    """A write-split count below 1 is refused before any table is read:
+    the session and the data dir passed here would fail on first use."""
+    monkeypatch.setenv("SPARK_GRAFT_DAY_WRITE_SPLITS", splits)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DAY_WRITE_SPLITS"):
+        _run("dynamic_partition_overwrite", None, "/nonexistent-sf-dir")
 
 
 def test_dynamic_overwrite_touches_only_the_backfilled_day(spark, sf_dir):

@@ -99,13 +99,15 @@ def test_drain_retry_and_subsuming_acks(fake_paho):
         t.client.on_message(t.client, None, FakeMsg("t/1", str(i).encode()))
 
     b1 = t.drain(1, max_records=3, timeout_s=0.05)
-    assert [m.payload for m in b1] == [b"0", b"1", b"2"]
+    assert b1["payload"] == [b"0", b"1", b"2"]
+    assert b1["seq"] == [0, 1, 2]
     # a retried task of the same batch re-reads the SAME buffered messages
     again = t.drain(1, max_records=3, timeout_s=0.05)
-    assert [m.payload for m in again] == [b"0", b"1", b"2"]
+    assert again == b1
 
     b2 = t.drain(2, max_records=10, timeout_s=0.05)
-    assert [m.payload for m in b2] == [b"3", b"4"]
+    assert b2["payload"] == [b"3", b"4"]
+    assert b2["seq"] == [3, 4]
     assert t.client.acked == []  # nothing acked before commit
 
     # committing batch 2 acks batch 1 too (subsume previous checkpoints)
@@ -119,11 +121,40 @@ def test_drain_retry_and_subsuming_acks(fake_paho):
     assert len(t.client.acked) == 5
 
 
+def test_drain_columns_keep_user_property_order(fake_paho):
+    """drain hands the reader the spool's column dict: user properties as
+    ordered pairs, duplicate keys kept in wire order. The shared Arrow
+    conversion keeps them in list mode and collapses them last-wins in map
+    mode."""
+    from flink_emqx_connector_spark.sources.emqx import columns_to_record_batches
+    from flink_emqx_connector_spark.sources.transport import COLUMNS
+
+    t = _transport()
+    m = FakeMsg("t/1", b"dup")
+    wire = [("k", "v1"), ("k", "v2"), ("trace", "t9")]
+    m.properties = types.SimpleNamespace(UserProperty=wire)
+    t.client.on_message(t.client, None, m)
+    t.client.on_message(t.client, None, FakeMsg("t/1", b"plain"))
+    cols = t.drain(1, max_records=10, timeout_s=0.05)
+    assert tuple(cols) == COLUMNS
+    assert cols["properties"] == [wire, []]
+    (listed,) = columns_to_record_batches(cols, props_mode="list")
+    assert listed.column("properties_list").to_pylist() == [
+        [{"key": k, "value": v} for k, v in wire],
+        [],
+    ]
+    (mapped,) = columns_to_record_batches(cols)
+    assert mapped.column("properties").to_pylist() == [
+        [("k", "v2"), ("trace", "t9")],
+        [],
+    ]
+
+
 def test_broker_offline_at_start_tolerated(fake_paho):
     FakeClient.offline = True
     t = _transport(clientid="c-off")  # must not raise (ST6)
     assert t.client.async_pending
-    assert t.drain(1, max_records=10, timeout_s=0.01) == []
+    assert t.drain(1, max_records=10, timeout_s=0.01)["payload"] == []
 
 
 def test_bounded_inflight_queue_drops_to_redelivery(fake_paho, monkeypatch):
@@ -145,7 +176,7 @@ def test_bounded_inflight_queue_drops_to_redelivery(fake_paho, monkeypatch):
     assert t.queue.qsize() == 8  # memory flat at the bound
     assert t.dropped == 92
 
-    delivered = {m.payload for m in t.drain(1, max_records=50, timeout_s=0.05)}
+    delivered = set(t.drain(1, max_records=50, timeout_s=0.05)["payload"])
     assert delivered == {b"m%03d" % i for i in range(8)}
     t.ack_upto(1)
 
@@ -158,7 +189,7 @@ def test_bounded_inflight_queue_drops_to_redelivery(fake_paho, monkeypatch):
             if payload not in acked:
                 t.client.on_message(t.client, None, FakeMsg("t/1", payload))
         assert t.queue.qsize() <= 8
-        delivered |= {m.payload for m in t.drain(batch, 50, 0.05)}
+        delivered |= set(t.drain(batch, 50, 0.05)["payload"])
         t.ack_upto(batch)
         acked = {bytes(m.payload) for m in t.client.acked}
         batch += 1
@@ -186,13 +217,13 @@ def test_bounded_queue_backpressure_no_drops_with_live_reader(fake_paho):
     deadline = 40
     while len(got) < 40 and deadline > 0:
         bid = len(got)
-        got.extend(t.drain(bid, max_records=4, timeout_s=0.2))
+        got.extend(t.drain(bid, max_records=4, timeout_s=0.2)["payload"])
         t.ack_upto(bid)
         deadline -= 1
     feeder.join(timeout=10)
     assert not feeder.is_alive()
     assert t.dropped == 0
-    assert [m.payload for m in got] == [b"p%02d" % i for i in range(40)]
+    assert got == [b"p%02d" % i for i in range(40)]
 
 
 def test_session_expiry_option_reaches_connect():

@@ -135,9 +135,9 @@ def test_message_delivery_shared_group(emqx):
     got = []
     per_member = []
     for t in ts:
-        msgs = t.drain(1, max_records=n, timeout_s=0.5)
-        per_member.append(len(msgs))
-        got += [m.payload for m in msgs]
+        payloads = t.drain(1, max_records=n, timeout_s=0.5)["payload"]
+        per_member.append(len(payloads))
+        got += payloads
     assert sorted(got) == sorted(str(i).encode() for i in range(n))
     # balancing: with 30 messages no member is starved (EMQX default
     # strategy round_robin; any reasonable strategy gives every member >0)
@@ -160,7 +160,7 @@ def test_graceful_stop_then_restart_no_redelivery(emqx):
     for i in range(10):
         pub.publish(f"rb/{u}", str(i).encode(), qos=1).wait_for_publish()
     assert _wait(lambda: t.queue.qsize() == 10, timeout=20)
-    assert len(t.drain(1, max_records=100, timeout_s=0.5)) == 10
+    assert len(t.drain(1, max_records=100, timeout_s=0.5)["payload"]) == 10
     t.ack_upto(1)
     time.sleep(0.5)  # let PUBACKs reach the broker before disconnecting
     t.client.disconnect()
@@ -170,7 +170,7 @@ def test_graceful_stop_then_restart_no_redelivery(emqx):
     assert t2.queue.qsize() == 0, "acked messages must not be redelivered"
     pub.publish(f"rb/{u}", b"after", qos=1).wait_for_publish()
     assert _wait(lambda: t2.queue.qsize() == 1, timeout=20)
-    assert [m.payload for m in t2.drain(1, 10, 0.5)] == [b"after"]
+    assert t2.drain(1, 10, 0.5)["payload"] == [b"after"]
     t2.ack_upto(1)
     t2.client.disconnect()
     pub.disconnect()
@@ -189,15 +189,13 @@ def test_crash_without_ack_redelivers(emqx, qos):
         pub.publish(f"rb/{u}", str(i).encode(), qos=qos).wait_for_publish()
     assert _wait(lambda: t.queue.qsize() == 10, timeout=20)
     msgs = t.drain(1, max_records=100, timeout_s=0.5)
-    assert len(msgs) == 10
+    assert len(msgs["payload"]) == 10
     t.client.loop_stop()  # crash: socket dies, no DISCONNECT, no acks
 
     t2 = _transport(host, port, f"crash-{u}", group=f"g{u}")
     assert _wait(lambda: t2.queue.qsize() >= 10, timeout=30)
     redelivered = t2.drain(1, max_records=100, timeout_s=0.5)
-    assert sorted(m.payload for m in redelivered) == sorted(
-        m.payload for m in msgs
-    )
+    assert sorted(redelivered["payload"]) == sorted(msgs["payload"])
     t2.ack_upto(1)
     time.sleep(0.5)
     t2.client.disconnect()
@@ -254,7 +252,7 @@ def test_bridge_transport_counts(emqx, tmp_path):
         last.wait_for_publish()
         st = SpoolTransport(spool)
         assert _wait(lambda: st.latest_seq() >= n, timeout=30)
-        payloads = [m.payload for m in st.read_range(0, 10 * n, 0, 1)]
+        payloads = st.read_range_columns(0, 10 * n, 0, 1)["payload"]
         assert sorted(set(payloads)) == [b"m%04d" % i for i in range(n)]
         assert len(payloads) <= 2 * n  # at-least-once hop stays bounded
         pub.disconnect()

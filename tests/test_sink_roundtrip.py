@@ -138,8 +138,8 @@ def test_stream_writer_format_emqx_spool(spark, tmp_path):
     q.awaitTermination(60)
 
     t = SpoolTransport(spool_b)
-    msgs = t.read_range(0, t.latest_seq(), 0, 1)
-    assert sorted((m.topic, m.payload) for m in msgs) == [
+    cols = t.read_range_columns(0, t.latest_seq(), 0, 1)
+    assert sorted(zip(cols["topic"], cols["payload"])) == [
         (f"out/{i}", str(i).encode()) for i in range(6)
     ]
 
@@ -221,7 +221,11 @@ def test_idempotent_sink_skips_replayed_batch(spark, tmp_path):
 
     def count_msgs():
         t = SpoolTransport(spool)
-        return len(t.read_range(0, t.latest_seq(), partition_id=0, num_partitions=1))
+        return len(
+            t.read_range_columns(
+                0, t.latest_seq(), partition_id=0, num_partitions=1
+            )["seq"]
+        )
 
     sink(out, batch_id=0)
     assert count_msgs() == 3
