@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 # Mersenne prime 2^61-1: modulus for the universal-hash permutations.
 _MERSENNE = (1 << 61) - 1
 
@@ -71,6 +73,20 @@ def _shingle_table(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataF
         F.col(id_col).alias("doc"), word_ngrams(F.col(text_col), n).alias("sh")
     )
     return sh
+
+
+def _shingle_rows(sh: DataFrame, *cols) -> DataFrame:
+    """``cols`` plus one row per shingle ``s`` of a ``_shingle_table``.
+
+    explode_outer and an explicit null filter, not explode: from a plain
+    explode Spark infers ``size(sh) > 0 AND isnotnull(sh)`` and pushes it
+    through _shingle_table's repartition down to the scan, so the whole
+    tokenization ran once before the shuffle and again after it. Shingles
+    are concat_ws outputs, never null, so the rows are the same.
+    """
+    return sh.select(*cols, F.explode_outer("sh").alias("s")).filter(
+        F.col("s").isNotNull()
+    )
 
 
 def _measure_exprs(measure: str):
@@ -137,9 +153,9 @@ def ngram_jaccard_pairs(
     # needed later, and join on xxhash64 of the shingle, not the string:
     # the self-join moves (8B key, 8B doc, 4B n) rows instead of text
     # (collision odds over a shingle vocabulary are ~|V|²/2⁶⁴ — vanishing).
-    ex = sh.select(
-        "doc", F.size("sh").alias("n"), F.explode("sh").alias("s")
-    ).select("doc", "n", F.xxhash64("s").alias("s"))
+    ex = _shingle_rows(sh, "doc", F.size("sh").alias("n")).select(
+        "doc", "n", F.xxhash64("s").alias("s")
+    )
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
@@ -177,7 +193,7 @@ def ngram_jaccard_pairs_dfcap(
     capped space so Jaccard stays a true set similarity there.
 
     The exploded shingle table feeds four consumers (df filter, per-doc
-    sizes, both self-join sides), so the capped table is localCheckpoint'ed
+    sizes, both self-join sides), so the capped table is materialized
     once — the same eager-driver-step pattern as connected_components —
     and per-doc sizes ride along as a window column so the self-join's
     groupBy carries them for free (no size-lookup joins).
@@ -196,16 +212,15 @@ def ngram_jaccard_pairs_dfcap(
     # it like the dense/inverted branches so this regime doesn't pay a
     # second corpus shingling (ADVICE r8)
     sh = _shingle_table(docs, text_col, id_col, n) if shingles is None else shingles
-    ex = sh.select("doc", F.explode("sh").alias("s")).select(
-        "doc", F.xxhash64("s").alias("s")
-    ).localCheckpoint()
+    ex = materialize(
+        _shingle_rows(sh, "doc").select("doc", F.xxhash64("s").alias("s"))
+    )
     kept = ex.groupBy("s").agg(F.count("*").alias("df")).filter(
         F.col("df") <= df_cap
     )
-    cex = (
+    cex = materialize(
         ex.join(kept.select("s"), "s")
         .withColumn("n", F.count("*").over(Window.partitionBy("doc")))
-        .localCheckpoint()
     )
     a, b = cex.alias("a"), cex.alias("b")
     inter = (
@@ -505,9 +520,9 @@ def ngram_jaccard_pairs_auto(
             # eager checkpoint of the answer-sized pair list WHILE sh is
             # still persisted: the one tokenize pass (the stats pass above)
             # serves the whole execution
-            return ngram_jaccard_pairs_dense(
+            return materialize(ngram_jaccard_pairs_dense(
                 docs, threshold, n, text_col, id_col, shingles=sh, measure=measure
-            ).localCheckpoint()
+            ))
         join_rows = (
             ex.groupBy("s")
             .agg(F.count("*").alias("df"))
@@ -519,17 +534,17 @@ def ngram_jaccard_pairs_auto(
             decision["strategy"] = "inverted"
             if stats is not None:
                 stats.update(decision)
-            return ngram_jaccard_pairs(
+            return materialize(ngram_jaccard_pairs(
                 docs, threshold, n, text_col, id_col, shingles=sh, measure=measure
-            ).localCheckpoint()
+            ))
         if measure == "containment":
             decision["strategy"] = "dfcap"
             if stats is not None:
                 stats.update(decision)
-            return ngram_jaccard_pairs_dfcap(
+            return materialize(ngram_jaccard_pairs_dfcap(
                 docs, threshold, n=n, text_col=text_col, id_col=id_col,
                 measure=measure, shingles=sh,
-            ).localCheckpoint()
+            ))
         decision["strategy"] = "minhash_lsh"
         if stats is not None:
             stats.update(decision)
@@ -618,7 +633,7 @@ def minhash_signatures(
     """
     params = _minhash_params(num_hashes)
     sh = shingles if shingles is not None else _shingle_table(docs, text_col, id_col, n)
-    ex = sh.select("doc", F.explode("sh").alias("s")).select(
+    ex = _shingle_rows(sh, "doc").select(
         "doc", _shingle_hash_expr(F.col("s")).alias("h")
     )
     mins = [
@@ -703,7 +718,7 @@ def _verify_candidates(
     ratio_ok = F.least("nsh_a", "nsh_b") >= F.lit(threshold) * F.greatest(
         "nsh_a", "nsh_b"
     ) - F.lit(1e-9)
-    screened = (
+    screened = materialize(
         cand.join(siga, "doc_a")
         .join(sigb, "doc_b")
         .filter(ratio_ok & (est >= F.lit(est_floor)))
@@ -712,7 +727,6 @@ def _verify_candidates(
         # + the estimator filter exist to make it small): the exact verify
         # consumes it twice (pair list + doc-id filter), and without the
         # checkpoint each consumer would re-run the screening joins.
-        .localCheckpoint()
     )
     cand_ids = screened.select(
         F.explode(F.array("doc_a", "doc_b")).alias(id_col)
@@ -724,10 +738,9 @@ def _verify_candidates(
     # of the candidate docs ran twice (r14; candidate-bounded by
     # construction, 8 B/shingle — the §5 cache-selection rule's "reduced
     # table").
-    sh = (
+    sh = materialize(
         _shingle_table(cand_docs, text_col, id_col, n)
         .select("doc", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh"))
-        .localCheckpoint()
     )
     sa = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -832,16 +845,15 @@ def minhash_lsh_pairs(
         # preserves the corpus-scan partitioning, so the hot-fp skew-split
         # property of the within-group join is unchanged (pinned by
         # tests/test_dedup.py::test_minhash_within_group_expansion_is_skew_splittable).
-        doc_fp = base.select(
+        doc_fp = materialize(base.select(
             "doc", F.md5(F.encode(text_col, "UTF-8")).alias("fp")
-        ).localCheckpoint()
-        groups = (
+        ))
+        groups = materialize(
             doc_fp.groupBy("fp")
             .agg(F.min("doc").alias("rep"), F.collect_list("doc").alias("members"))
             # consumed twice below (rep filter, 2-sided member expansion);
             # one row per distinct text — same eager-driver-step pattern
             # as connected_components
-            .localCheckpoint()
         )
         rep_ids = groups.select(F.col("rep").alias("doc"))
         # no broadcast hint: |distinct texts| is data-proportional — AQE
@@ -854,16 +866,16 @@ def minhash_lsh_pairs(
     id_col = "doc"
     # Candidate generation: one shuffle of (band, bucket-hash, doc) short
     # rows, grouped per bucket, pairs exploded from the collected set.
-    # The signature table is localCheckpoint'ed so the whole pipeline
+    # The signature table is materialized so the whole pipeline
     # computes it exactly ONCE (bucketing + the estimated-Jaccard filter
     # below both consume it); the earlier explicit persist leaked a
     # CacheManager entry for the session lifetime. Bucket membership lists
     # are per-distinct-text thanks to the canonicalization above; an
     # adversarial templated corpus still collides heavily at r rows/band —
     # which the estimator filter absorbs.
-    sigs = minhash_signatures(
+    sigs = materialize(minhash_signatures(
         docs, num_hashes, n, text_col, id_col, shingles=shingles
-    ).localCheckpoint()
+    ))
     # Exact band key (concat of the band's r signature slots) instead of a
     # murmur3 hash of them: grouping is identical-or-better (no bucket-hash
     # collisions) and the key is trivially reproducible in the SQL oracle.
@@ -1058,7 +1070,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fps: DataFrame | None = None,
 ) -> DataFrame:
     """SimHash near-dup PAIRS at Hamming distance ≤ ``max_hamming`` (≤ 3
     with the default 4-band geometry) — X86, the relation form of the
@@ -1082,7 +1093,7 @@ def simhash_hamming_pairs(
     comment). Cross-group pairs expand representative pairs over group
     members through two fingerprint-keyed joins.
 
-    The fingerprint table is localCheckpoint'ed once: the Arrow-batched
+    The fingerprint table is materialized once: the Arrow-batched
     SimHash UDF scan is the dominant cost and feeds three consumers
     (rep table, both within-join sides); without the checkpoint a
     self-join recomputes the scan per side (self-joins get no
@@ -1091,14 +1102,8 @@ def simhash_hamming_pairs(
     Arithmetic-shift + mask band extraction and two's-complement popcount
     are engine-identical, so the DuckDB oracle replays the relation
     exactly (plans/dedup.py:dedup_simhash_hamming).
-
-    ``fps``, when given, is an already-materialized ``(id_col, simhash)``
-    table (the plans layer's session-scoped fingerprint artifact) — the
-    UDF corpus scan is skipped entirely and this operator only pays the
-    banding/verify stages.
     """
-    if fps is None:
-        fps = simhash_fingerprints(docs, text_col, id_col).localCheckpoint()
+    fps = materialize(simhash_fingerprints(docs, text_col, id_col))
     reps = fps.groupBy("simhash").agg(F.min(id_col).alias("rep"))
     band_structs = F.array(
         *[
@@ -1221,7 +1226,7 @@ def connected_components(
     per-round job overhead, not data. Larger graphs take the distributed
     loop, whose scale decisions are:
 
-    - **pairs are localCheckpoint'ed once, eagerly**: the pair list is the
+    - **pairs are materialized once, eagerly**: the pair list is the
       output of a whole near-dup pipeline (Jaccard / cosine); without the
       checkpoint every round (and the doubled-edge build) would re-execute
       that pipeline from the scan.
@@ -1233,19 +1238,17 @@ def connected_components(
       ``tests/test_dedup.py``). Same round bound as the published
       large-star/small-star alternating algorithm, with labels instead of
       edge rewrites, so the edge set stays immutable (checkpointed once).
-    - **one Spark action per round**: the new label frame is marked for
-      lazy localCheckpoint and the convergence count runs on top of it —
-      that single job both materializes/truncates the lineage and returns
-      the changed-row count.
+    - **lineage truncated every round**: the new label frame is
+      materialized, and the convergence count runs on the stored rows.
 
     Deterministic: at fixpoint every label equals the min doc_id reachable
     (labels only move down, never leave the component, and the component
     min's label can never change). ``stats["rounds"]`` reports the round
     count when a dict is passed.
     """
-    p = pairs.select(
+    p = materialize(pairs.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).localCheckpoint()  # pair generation (the expensive part) runs ONCE
+    ))  # pair generation (the expensive part) runs ONCE
     n_pairs = p.count()  # cheap: counts the materialized checkpoint
     if n_pairs <= small_graph_edges:
         # Collect the RAW pair list — no doubled-edge union+distinct
@@ -1268,16 +1271,14 @@ def connected_components(
         )
     if stats is not None:
         stats["path"] = "distributed"
-    edges = (
+    edges = materialize(
         p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint()  # built from the checkpointed pairs, not the scan
-    )
-    labels = (
+    )  # built from the checkpointed pairs, not the scan
+    labels = materialize(
         edges.select("a")
         .distinct()
         .select(F.col("a").alias("node"), F.col("a").alias("comp"))
-        .localCheckpoint()
     )
     for it in range(max_iter):
         nbr_min = (
@@ -1295,17 +1296,15 @@ def connected_components(
         jump = labels.select(
             F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
         )
-        updated = (
+        updated = materialize(
             prop.join(jump, prop.mid == jump.jnode, "left")
             .select(
                 "node",
                 "old_comp",
                 F.least(F.col("mid"), F.coalesce("jcomp", F.col("mid"))).alias("comp"),
             )
-            .localCheckpoint(eager=False)
         )
-        # the ONE action of the round: materializes the checkpoint and
-        # returns the convergence signal together
+        # the convergence signal counts the materialized rows
         changed = updated.filter(F.col("comp") != F.col("old_comp")).count()
         labels = updated.select("node", "comp")
         if stats is not None:

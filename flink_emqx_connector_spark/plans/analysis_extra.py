@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round, stable_round_sql
 
@@ -638,18 +639,16 @@ def token_cooccurrence_pmi(spark, sf_dir):
     # marginals and the token total. Both checkpointed once: the old
     # shape re-tokenized the corpus five times (r13 audit: 5 document
     # scans → 2, one per census).
-    cen = (
+    cen = materialize(
         bg.groupBy("w1", "w2")
         .agg(F.count("*").alias("c12"))
-        .localCheckpoint()
     )
     big = cen.filter(F.col("c12") >= _PMI_MIN_COUNT)
-    uni = (
+    uni = materialize(
         _docs(spark, sf_dir)
         .select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint()
     )
     tots = uni.agg(F.sum("c").alias("nu")).crossJoin(
         cen.agg(F.sum("c12").alias("nb"))
@@ -818,11 +817,10 @@ def basket_brand_lift(spark, sf_dir):
     # (brand_n, tot, both self-join sides via a/b); without the checkpoint,
     # the final plan recomputed the join+distinct subtree five
     # times (r13 audit: 10 parquet scans / 5 distinct shuffles → 1 each).
-    basket = (
+    basket = materialize(
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand"))
         .distinct()
-        .localCheckpoint()
     )
     brand_n = basket.groupBy("brand").agg(F.count("*").cast("bigint").alias("n"))
     tot = basket.agg(F.count_distinct("okey").cast("bigint").alias("t"))
@@ -1011,10 +1009,9 @@ def ks_distance_sources(spark, sf_dir):
     # grid join, and — via the derivation below — the per-source totals);
     # checkpoint it once so the corpus tokenize-and-count runs once
     # (r13 audit: 8 document scans → 1).
-    census = (
+    census = materialize(
         lens.groupBy("source", "v")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint()
     )
     sources = census.select("source").distinct()
     vs = census.select("v").distinct()
@@ -1045,14 +1042,14 @@ def ks_distance_sources(spark, sf_dir):
     w_lead = Window.partitionBy("source").orderBy("v")
     # Grid-sized (|sources| × |distinct lengths|) cumulative table feeds
     # both self-join legs; checkpoint so the grid build + windows run once.
-    gaps = cum.select(
+    gaps = materialize(cum.select(
         "source",
         "v",
         "cw",
         F.coalesce(F.lead("v").over(w_lead) - F.col("v"), F.lit(0)).alias(
             "gap"
         ),
-    ).localCheckpoint()
+    ))
     a = gaps.select(
         F.col("source").alias("source_a"), "v", F.col("cw").alias("cw_a"),
         F.col("gap").alias("gap_a"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 
@@ -136,11 +137,10 @@ def source_token_kl(spark, sf_dir):
     # The (source,term) census feeds four consumers (t, s, tot, scoring
     # join); checkpoint it once so the corpus tokenize + census shuffle
     # runs once, not four times (r13 audit: 4 document scans → 1).
-    st = (
+    st = materialize(
         d.select("source", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint()
     )
     t = st.groupBy("term").agg(F.sum("c").cast("double").alias("ct"))
     s = st.groupBy("source").agg(F.sum("c").cast("double").alias("cs"))
@@ -340,10 +340,9 @@ def mad_outlier_events(spark, sf_dir):
     # runs once. MAD stays an honest 3-pass algorithm (median →
     # deviation median → score): materializing the corpus-sized deviation
     # frame to save the third narrow scan would cost more than it saves.
-    med = (
+    med = materialize(
         ev.groupBy("event_type")
         .agg(F.median("value").alias("m"))
-        .localCheckpoint()
     )
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "d", F.abs(F.col("value") - F.col("m"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 from ..operators import dedup as D
 
@@ -213,17 +214,22 @@ def dedup_incremental(spark, sf_dir):
     # recompute-on-use. Repartition first for the same single-file-scan
     # spread reason as _shingle_table.
     par = spark.sparkContext.defaultParallelism
-    new_feat = (
+    new_feat = materialize(
         new.repartition(par, "doc_id")
         .select(
             "doc_id",
             F.md5(F.encode("text", "UTF-8")).alias("dig"),
             D.word_ngrams(F.col("text"), 2).alias("sh"),
         )
-        .localCheckpoint()
     )
-    ex_old = sh_old.select(
-        F.col("doc").alias("od"), F.size("sh").alias("on"), F.explode("sh").alias("s")
+    # `on` is made non-nullable: Spark infers isnotnull(on) from the
+    # Jaccard filter below and would push size(sh), the whole old-corpus
+    # tokenization, down to the scan below the repartition. The coalesce
+    # never fires: a row with a null sh has no shingle to keep.
+    ex_old = D._shingle_rows(
+        sh_old,
+        F.col("doc").alias("od"),
+        F.coalesce(F.size("sh"), F.lit(0)).alias("on"),
     )
     ex_new = new_feat.select(
         F.col("doc_id").alias("nd"),
@@ -398,11 +404,10 @@ def cross_source_duplication(spark, sf_dir):
 )
 def dedup_graph_triangles(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
         # consumed three times by the triangle join — materialize once
-        .localCheckpoint()
     )
     e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = pairs.select(F.col("doc_a").alias("b2"), F.col("doc_b").alias("c"))
@@ -478,10 +483,9 @@ def dedup_pipeline_report(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     # Pair-gen paid ONCE: consumed by the pair census, CC, and the 3-way
     # triangle self-join.
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     # comps is small (docs that appear in a pair) and already materialized
     # by connected_components (driver union-find → local relation on the
@@ -601,11 +605,10 @@ def dedup_pipeline_report(spark, sf_dir):
 )
 def dedup_graph_walk_centrality(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # pair-gen runs once; 3 rounds + degree reuse it
-    )
+    )  # pair-gen runs once; 3 rounds + degree reuse it
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
@@ -680,11 +683,10 @@ def dedup_graph_walk_centrality(spark, sf_dir):
 )
 def dedup_graph_pagerank(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # pair-gen runs once; 3 rounds + degree reuse it
-    )
+    )  # pair-gen runs once; 3 rounds + degree reuse it
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
@@ -749,10 +751,9 @@ def dedup_graph_pagerank(spark, sf_dir):
 )
 def cross_lang_neardup_census(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     langs = docs.select("doc_id", "lang")
     la = langs.select(

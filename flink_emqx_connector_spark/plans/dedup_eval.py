@@ -23,6 +23,7 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import QUERIES, register
 from .rounding import stable_round_sql
 
@@ -243,8 +244,8 @@ def dedup_lsh_recall_eval(spark, sf_dir):
         )
 
     try:
-        exact = pairs("dedup_ngram_jaccard", shingles=sh).localCheckpoint()
-        lsh = pairs("dedup_minhash_lsh", shingles=sh).localCheckpoint()
+        exact = materialize(pairs("dedup_ngram_jaccard", shingles=sh))
+        lsh = materialize(pairs("dedup_minhash_lsh", shingles=sh))
     finally:
         sh.unpersist()
     ne = exact.agg(F.count("*").cast("bigint").alias("n_exact"))

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round
 
@@ -172,19 +173,17 @@ def funnel_stage_conversion(spark, sf_dir):
     # checkpoint v and c once so each funnel stage scans events once
     # (r13 audit: 6 event scans → 3, one per stage — the algorithmic
     # floor: the sequential ts constraint needs each stage's raw events).
-    v = (
+    v = materialize(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint()
     )
-    c = (
+    c = materialize(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint()
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -249,15 +248,14 @@ def funnel_stage_conversion(spark, sf_dir):
 def daily_anomaly_events(spark, sf_dir):
     # The daily series feeds three consumers (median, MAD, flag join);
     # without pinning, Catalyst re-derives it per consumer = 4 scans of
-    # the fact table. localCheckpoint materializes the types×days rows
+    # the fact table. materialize() stores the types×days rows
     # once — tiny, and freed on GC (the round-2 cache lesson).
-    d = (
+    d = materialize(
         _events(spark, sf_dir)
         .groupBy(
             "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
         )
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
     )
     s = d.groupBy("event_type").agg(F.median("n").alias("med"))
     dev = d.join(F.broadcast(s), "event_type").withColumn(

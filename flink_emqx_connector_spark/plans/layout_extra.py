@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round, stable_round_sql
 
@@ -231,7 +232,7 @@ def fk_integrity_audit(spark, sf_dir):
     # key counts and the census join); without the checkpoint the
     # final plan scanned all seven parent tables and ran their distincts
     # TWICE (r13 audit: 19 parquet scans / 17 exchanges → 12 / 10).
-    parents = parents.localCheckpoint()
+    parents = materialize(parents)
     pn = parents.groupBy("prel").agg(
         F.count("*").cast("bigint").alias("n_parent")
     )

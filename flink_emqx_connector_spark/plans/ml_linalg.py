@@ -44,6 +44,7 @@ import numpy as np
 
 from pyspark.sql import Window, functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 _DIM = 64
@@ -350,11 +351,10 @@ def markov_stationary_events(spark, sf_dir):
         F.count("*").alias("cnt")
     )
     tot = trans.groupBy("s").agg(F.sum("cnt").alias("tot"))
-    p = (
+    p = materialize(
         trans.join(tot, "s")
         .select("s", "d", F.expr(f"cnt * {_P_SCALE} div tot").alias("pm"))
-        .localCheckpoint(eager=False)  # reused by all 3 iterations
-    )
+    )  # reused by all 3 iterations
     states = ev.select(F.col("event_type").alias("st")).distinct()
     # uniform start: micro-mass 1e6 split evenly over the states (exact
     # integer division, mirrored in the oracle's window form)
@@ -771,11 +771,10 @@ def embedding_pca_power_iteration(spark, sf_dir):
             F.expr(f"CAST(max(abs(cov_n2)) AS BIGINT) div {_C_CAP}"), F.lit(1)
         ).alias("s")
     )
-    cm = (
+    cm = materialize(
         full_m.crossJoin(F.broadcast(cs))
         .select("i", "j", F.expr("cov_n2 div s").alias("c"))
-        .localCheckpoint(eager=False)  # reused by all iterations
-    )
+    )  # reused by all iterations
     v = spark.range(1, _DIM + 1).select(
         F.col("id").cast("int").alias("d"), F.lit(1000).cast("bigint").alias("v")
     )

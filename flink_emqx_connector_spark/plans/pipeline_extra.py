@@ -23,6 +23,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 
@@ -466,11 +467,11 @@ def merge_upsert_orders(spark, sf_dir):
     # merge target); checkpoint it once so the orders scan + cents
     # conversion run once, not three times (r13 audit: 3 scans → 1 —
     # the real MERGE shape stages its delta once too).
-    cents = o.select(
+    cents = materialize(o.select(
         "o_orderkey",
         "o_orderstatus",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("c"),
-    ).localCheckpoint()
+    ))
     upd = cents.filter(F.col("o_orderkey") % 10 == 7).select(
         "o_orderkey", (F.col("c") + 1000).alias("new_c")
     )

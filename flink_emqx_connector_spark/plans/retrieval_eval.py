@@ -28,6 +28,7 @@ import os
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 _K1, _B = 1.2, 0.75
@@ -117,10 +118,9 @@ def bm25_search_topk(spark, sf_dir):
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     )
-    dl = (
+    dl = materialize(
         toks.groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("dl"))
-        .localCheckpoint()
     )
     corpus = dl.agg(
         F.count("*").cast("bigint").alias("n_docs"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round, stable_round_sql
 
@@ -310,11 +311,10 @@ def event_type_cooccurrence(spark, sf_dir):
     # both self-join legs); checkpoint it once so the events scan +
     # distinct shuffle run once, not four times (r13 audit: 5 event
     # scans → 1).
-    ut = (
+    ut = materialize(
         _events(spark, sf_dir)
         .select("user_id", "event_type")
         .distinct()
-        .localCheckpoint()
     )
     freq = ut.groupBy("event_type").agg(F.count("*").alias("n"))
     tot = ut.agg(F.count_distinct("user_id").alias("nu"))

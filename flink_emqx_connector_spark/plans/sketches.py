@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 _CMS_D = 4  # count-min depth (hash rows)
@@ -628,7 +629,7 @@ def join_size_cms_estimate(spark, sf_dir):
     tags=("sketch", "count-min", "merge", "approx"),
 )
 def sketch_merge_cms(spark, sf_dir):
-    census = (
+    census = materialize(
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select(
@@ -637,7 +638,6 @@ def sketch_merge_cms(spark, sf_dir):
         )
         .groupBy("half", "tok")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint()
     )
     # 60 bits of md5 per distinct token; row i's bucket = bits
     # [10i, 10i+10) (requires _CMS_W a power of two).

@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .curation_extra import _CLOSURE
 from .registry import register
 from .rounding import stable_round, stable_round_sql
@@ -227,10 +228,9 @@ def apportionment_dhondt_vs_hamilton(spark, sf_dir):
     # the divisor grid, the Hamilton base, the final join) — the old
     # shape re-ran the corpus census scan four times (r13 audit: 4
     # document scans → 1).
-    census = (
+    census = materialize(
         docs.groupBy("source")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .localCheckpoint()
     )
     tot = census.agg(F.sum("n_docs").cast("bigint").alias("t"))
     divisors = spark.range(1, 17).select(F.col("id").alias("d"))
@@ -994,10 +994,9 @@ def dedup_graph_bfs_reach(spark, sf_dir):
     from ..operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = (
+    pairs = materialize(
         D.ngram_jaccard_pairs_auto(docs, threshold=0.5, n=2)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -1008,20 +1007,19 @@ def dedup_graph_bfs_reach(spark, sf_dir):
         .filter(F.col("mb") > F.col("a"))
         .select(F.col("a").alias("doc"))
     )
-    visited = seeds.select("doc", F.lit(0).cast("bigint").alias("d")).localCheckpoint()
+    visited = materialize(seeds.select("doc", F.lit(0).cast("bigint").alias("d")))
     frontier = visited.select("doc")
     for step in range(1, 7):
-        nxt = (
+        nxt = materialize(
             frontier.join(edges, frontier["doc"] == edges["a"])
             .select(F.col("b").alias("doc"))
             .distinct()
             .join(visited.select("doc"), "doc", "left_anti")
             .select("doc", F.lit(step).cast("bigint").alias("d"))
-            .localCheckpoint()  # one action per layer; also counts below
-        )
+        )  # one job per layer; the count below reads the stored rows
         if nxt.count() == 0:
             break  # frontier dry — deeper layers are empty by BFS
-        visited = visited.union(nxt).localCheckpoint()
+        visited = materialize(visited.union(nxt))
         frontier = nxt.select("doc")
     return (
         visited.groupBy(F.col("d").alias("depth"))
@@ -1313,7 +1311,7 @@ def chunk_stitch_census(spark, sf_dir):
     # The prefix/suffix proxy rows feed three censuses (pre, suf, selfm);
     # checkpoint once so the text split runs once, not three times
     # (r13 audit: 3 document scans → 1).
-    k = w.filter(F.size("ws") >= 4).select(
+    k = materialize(w.filter(F.size("ws") >= 4).select(
         "doc_id",
         F.concat(
             F.col("ws").getItem(0), F.lit(" "), F.col("ws").getItem(1)
@@ -1321,7 +1319,7 @@ def chunk_stitch_census(spark, sf_dir):
         F.concat(
             F.element_at(F.col("ws"), -2), F.lit(" "), F.element_at(F.col("ws"), -1)
         ).alias("suf2"),
-    ).localCheckpoint()
+    ))
     pre = k.groupBy(F.col("pre2").alias("key")).agg(
         F.count("*").cast("bigint").alias("np")
     )
@@ -1877,16 +1875,15 @@ def kaplan_meier_time_to_purchase(spark, sf_dir):
     events = _t(spark, sf_dir, "events")
     eus = F.unix_micros(F.col("ts").cast("timestamp"))
     # pu and dur are USER-bounded (tiny next to the corpus) and each
-    # feeds 2+ downstream branches — localCheckpoint pins them so the
+    # feeds 2+ downstream branches — materialize() pins them so the
     # events scan runs exactly twice (pu + the purchase leg), not once
     # per consuming branch (pinned by test_plan_shapes)
-    pu = (
+    pu = materialize(
         events.groupBy("user_id")
         .agg(
             F.min(F.when(F.col("event_type") == "view", eus)).alias("t0"),
             F.max(eus).alias("tmaxu"),
         )
-        .localCheckpoint()
     )
     hz = pu.agg(F.max("tmaxu").alias("horizon"))
     conv = (
@@ -1897,7 +1894,7 @@ def kaplan_meier_time_to_purchase(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.min("tp").alias("te"))
     )
-    dur = (
+    dur = materialize(
         pu.filter(F.col("t0").isNotNull())
         .crossJoin(F.broadcast(hz))
         .join(conv, "user_id", "left")
@@ -1911,7 +1908,6 @@ def kaplan_meier_time_to_purchase(spark, sf_dir):
             .alias("d"),
             F.when(F.col("te").isNotNull(), 1).otherwise(0).alias("ev"),
         )
-        .localCheckpoint()
     )
     census = dur.groupBy("d").agg(
         F.sum("ev").cast("bigint").alias("n_events"),
@@ -2094,7 +2090,7 @@ def odds_ratio_long_docs_by_source(spark, sf_dir):
     # |sources|-row 2×2 table checkpointed: it feeds the totals AND the
     # final projection — the old shape re-ran the corpus classification
     # scan twice (r13 audit: 4 document scans → 2).
-    cls = (
+    cls = materialize(
         docs.crossJoin(F.broadcast(med))
         .groupBy("source")
         .agg(
@@ -2105,7 +2101,6 @@ def odds_ratio_long_docs_by_source(spark, sf_dir):
             .cast("bigint")
             .alias("b"),
         )
-        .localCheckpoint()
     )
     tot = cls.agg(
         F.sum("a").cast("bigint").alias("ta"),

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 
@@ -213,13 +214,12 @@ def typo_token_pairs(spark, sf_dir):
 
     # Vocab census checkpointed: it feeds the typo channel AND the union
     # merge — the old shape tokenized the corpus twice (r13 audit).
-    real_toks = (
+    real_toks = materialize(
         load_table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("tok"))
         .filter((F.length("tok") >= 3) & (F.length("tok") <= 12))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("df"))
-        .localCheckpoint()
     )
     # deterministic typo channel — see oracle comment
     noisy = real_toks.filter(
@@ -239,7 +239,7 @@ def typo_token_pairs(spark, sf_dir):
     # token itself + one-char deletions: shared variant <=> edit dist <= 1.
     # Checkpointed: both self-join legs read the variant table, so the
     # deletion-variant explode over the vocabulary runs once, not twice.
-    vars_ = toks.select(
+    vars_ = materialize(toks.select(
         "tok",
         "df",
         F.explode(
@@ -252,7 +252,7 @@ def typo_token_pairs(spark, sf_dir):
                 ),
             )
         ).alias("v"),
-    ).localCheckpoint()
+    ))
     a = vars_.select(
         F.col("v"),
         F.col("tok").alias("tok_a"),

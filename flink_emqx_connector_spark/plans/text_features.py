@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 
@@ -89,10 +90,9 @@ def tfidf_top_terms(spark, sf_dir):
     # checkpoint it so the corpus tokenize+shuffle runs once, not twice
     # (r13 audit: 3 document scans → 2 — the remaining extra is the 1-row
     # doc count).
-    tf = (
+    tf = materialize(
         toks.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint()
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = d.agg(F.count("*").alias("n_docs"))
@@ -443,10 +443,9 @@ def lm_perplexity_docs(spark, sf_dir):
     # per-doc scoring join legitimately re-reads the bigram instances;
     # checkpointing THOSE would write a stream larger than the text
     # itself, so the instance pass stays at 2).
-    pc = (
+    pc = materialize(
         inst.groupBy("w1", "w2")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint()
     )
     wc = pc.groupBy("w1").agg(F.sum("cnt").alias("tot"))
     v = pc.agg(F.countDistinct("w2").cast("double").alias("vocab"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round
 
@@ -513,12 +514,11 @@ def q11_important_stock(spark, sf_dir):
     nat = _t(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
     )
-    pv = (
+    pv = materialize(
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), F.col("s_nationkey") == nat.n_nationkey)
         .groupBy("l_partkey")
         .agg(F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("val"))
-        .localCheckpoint()
     )
     thresh = pv.agg((F.sum("val") * 0.001).alias("cut"))
     return (
@@ -646,7 +646,7 @@ def q15_top_supplier(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
     sup = _t(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = materialize(
         li.groupBy("l_suppkey")
         .agg(
             # exact 1e4 fixed point (q1 conversion rationale): the max/
@@ -661,7 +661,6 @@ def q15_top_supplier(spark, sf_dir):
                 / 1e2
             ).alias("total_revenue")
         )
-        .localCheckpoint()
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -800,10 +799,9 @@ def q20_part_share_suppliers(spark, sf_dir):
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
-    shipped = (
+    shipped = materialize(
         li.groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("qty"))
-        .localCheckpoint()
     )
     tot = shipped.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum("qty").alias("total_qty")
@@ -930,14 +928,13 @@ def q2_min_cost_supplier(spark, sf_dir):
     part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 25)
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
-    cost = (
+    cost = materialize(
         li.groupBy("l_partkey", "l_suppkey")
         .agg(
             stable_round(
                 F.min(F.col("l_extendedprice") / F.col("l_quantity")), 4
             ).alias("unit_cost")
         )
-        .localCheckpoint()
     )
     best = cost.groupBy(F.col("l_partkey").alias("bpk")).agg(
         F.min("unit_cost").alias("best_cost")

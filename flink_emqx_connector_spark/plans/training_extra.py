@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .registry import register
 
 _PACK_BUDGET = 512
@@ -448,10 +449,9 @@ def temperature_resample_sources(spark, sf_dir):
     # norm); Spark does not share common subtrees, so without the checkpoint,
     # the corpus scan + census shuffle ran THREE times in the
     # final plan (r13 audit: 5 parquet scans → 2).
-    counts = (
+    counts = materialize(
         d.groupBy("source")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint()
     )
     tot = counts.agg(F.sum("n").cast("double").alias("total"))
     weighted = counts.crossJoin(F.broadcast(tot)).withColumn(
@@ -606,7 +606,7 @@ def token_budget_selection(spark, sf_dir):
     # array_distinct() over the full text column three times (r13 audit:
     # 3 parquet text scans → 1; guide §8 — compute the heavy derivation
     # once, decide on the lightweight proxy).
-    st = docs.select(
+    st = materialize(docs.select(
         "doc_id",
         "source",
         F.size(toks).cast("bigint").alias("n_tok"),
@@ -616,7 +616,7 @@ def token_budget_selection(spark, sf_dir):
                 " div size(split(text, ' '))"
             )
         ).alias("ttr_milli"),
-    ).localCheckpoint()
+    ))
     # phase 1: per-band token subtotals (band = exact milli-TTR value;
     # bounded domain 0..1000 regardless of corpus size)
     band = st.groupBy("ttr_milli").agg(

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..materialize import materialize
 from .registry import register
 from .rounding import stable_round, stable_round_sql
 
@@ -252,12 +253,11 @@ def dedup_common_substring(spark, sf_dir, docs=None):
         "doc_id", F.explode(F.array_distinct(spans)).alias("span")
     ).select("doc_id", F.md5("span").alias("sd"))
     df = ex.groupBy("sd").agg(F.count("*").alias("df"))
-    ex_f = (
+    ex_f = materialize(
         ex.join(
             df.filter((F.col("df") >= 2) & (F.col("df") <= _SPAN_DF_CAP)), "sd"
         )
         .select("doc_id", "sd")
-        .localCheckpoint()
     )
     a, b = ex_f.alias("a"), ex_f.alias("b")
     return (

@@ -110,6 +110,10 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.extraJavaOptions", _driver_java_options())
         .config("spark.ui.enabled", "false")
+        # materialize.py writes reliable checkpoints when a checkpoint dir
+        # is set; delete their files once the frame is garbage collected,
+        # the retention localCheckpoint blocks already have.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # The oracle gate collects both engines' full outputs to compare;
         # at sf10 a per-user/per-hour result exceeds the 1g default. Only

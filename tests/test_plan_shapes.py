@@ -193,6 +193,23 @@ def test_scan_orc_roundtrip_reads_orc(plans):
     assert p.count("HashAggregate") >= 2, p
 
 
+def test_minhash_signatures_tokenize_once_after_repartition(spark, sf_dir):
+    """The signature plan repartitions the corpus and tokenizes after the
+    shuffle, once. A plain explode let Spark infer ``size(sh) > 0`` and push
+    it below the repartition, so the whole split/zip_with/array_distinct
+    tokenization also ran at the scan, before the shuffle."""
+    import os
+
+    from flink_emqx_connector_spark.operators import dedup as D
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    lines = plan_of(D.minhash_signatures(docs), mode="simple").splitlines()
+    first_exchange = max(i for i, line in enumerate(lines) if "Exchange" in line)
+    below = lines[first_exchange + 1 :]
+    assert any("Scan parquet" in line for line in below), lines
+    assert not any("zip_with" in line for line in below), "\n".join(lines)
+
+
 def test_dfcap_join_on_checkpointed_capped_table(plans):
     """The df-capped self-join runs over the checkpointed capped shingle
     table (Scan ExistingRDD), NOT by re-deriving the corpus explode per
